@@ -14,6 +14,14 @@ label-chain depth every round, so convergence needs O(log diameter)
 rounds instead of O(diameter) — a 200-hop chain converges in ~8 rounds
 where plain propagation needs 200.  Each round ``localCheckpoint``s
 the labels so the plan/lineage stays O(1) deep instead of O(rounds).
+
+The symmetric edge list is built from ONE scan of the pairs (each row
+explodes into both orientations) and ``localCheckpoint``ed once, so
+the caller's pair lineage (LSH join, verification UDFs) runs exactly
+once and every round plans against a leaf instead of re-analyzing
+that lineage.  The first hop is folded into the seeding: initial
+labels are ``least(node, min neighbour)`` straight off the edge list,
+so the seed checkpoint already does round 1's propagation.
 """
 
 from __future__ import annotations
@@ -48,16 +56,14 @@ def duplicate_clusters(
         return _star_clusters(pairs, id_a, id_b, max_rounds)
     if method != "jump":
         raise ValueError(f"unknown method {method!r} (use 'jump' or 'star')")
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .persist()
-    )
+    edges = _symmetric_edges(pairs, id_a, id_b).distinct().localCheckpoint()
+    # seed with the first hop: every node starts at the min of itself
+    # and its neighbours (a neighbour id is itself a node, so pointer
+    # jumping stays sound)
     labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
+        edges.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias("cluster_id"))
+        .withColumnRenamed("src", "id")
         .localCheckpoint()
     )
     from pyspark.sql import Observation
@@ -129,6 +135,17 @@ def duplicate_clusters(
         "(with pointer jumping that means component diameter > "
         f"~2^{max_rounds}); raise max_rounds"
     )
+
+
+def _symmetric_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """pairs[id_a,id_b] -> edges[src,dst] holding both orientations of
+    every pair, from ONE scan: a union of the two projections would
+    plan and run the caller's whole pair lineage twice."""
+    both = F.array(
+        F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+        F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+    )
+    return pairs.select(F.explode(both).alias("_e")).select("_e.src", "_e.dst")
 
 
 def _with_min(edges: DataFrame) -> DataFrame:
@@ -229,8 +246,8 @@ def _star_clusters(
             )
             # nodes isolated by the self-pair filter label themselves
             nodes = (
-                pairs.select(F.col(id_a).alias("id"))
-                .union(pairs.select(F.col(id_b).alias("id")))
+                _symmetric_edges(pairs, id_a, id_b)
+                .select(F.col("src").alias("id"))
                 .distinct()
             )
             return nodes.join(labels, "id", "left").select(

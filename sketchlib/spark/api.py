@@ -328,25 +328,6 @@ def range_partition_bounds(
     return out
 
 
-def sample_column(
-    df: DataFrame, col: str, capacity: int = 1024, seed: int = 42
-):
-    """Mergeable uniform sample (bottom-k) of a numeric column in one
-    scan; returns the ReservoirSample sketch.  Each partition builder
-    gets a partition-unique salt (evaluated inside the worker) so
-    replicated shards draw independent keys."""
-    from sketchlib.core.reservoir import ReservoirSample
-    from sketchlib.spark.aggregate import task_partition_salt
-
-    return sketch_column(
-        df, col,
-        lambda: ReservoirSample(
-            capacity=capacity, seed=seed, salt=task_partition_salt()
-        ),
-        KIND_DOUBLE,
-    )
-
-
 def build_theta(df: DataFrame, col: str, k: int = 4096, is_array: bool = False):
     """KMV/theta distinct sketch over a key column (JVM-side hashing)."""
     from sketchlib.core.theta import ThetaSketch

@@ -319,6 +319,56 @@ def test_duplicate_clusters_long_chain_and_bound(spark):
         duplicate_clusters(chain, max_rounds=2)
 
 
+def test_duplicate_clusters_seeded_labels_converge_in_one_round(spark):
+    # the seed labels already take the first hop (min over the node
+    # and its neighbours), so components of radius 1 around their
+    # minimum converge in ONE round: disjoint pairs and a star centred
+    # on its minimum id
+    from sketchlib.dedup.cluster import duplicate_clusters
+
+    disjoint = spark.createDataFrame(
+        [(1, 2), (4, 3), (10, 11)], "id_a long, id_b long"
+    )
+    got = {
+        r["id"]: r["cluster_id"]
+        for r in duplicate_clusters(disjoint, max_rounds=1).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 3, 4: 3, 10: 10, 11: 10}
+
+    star = spark.createDataFrame(
+        [(0, i) for i in range(1, 50)] + [(i, 0) for i in range(50, 60)],
+        "id_a long, id_b long",
+    )
+    got = duplicate_clusters(star, max_rounds=1).collect()
+    assert sorted((r["id"], r["cluster_id"]) for r in got) == [
+        (i, 0) for i in range(60)
+    ]
+
+
+def test_duplicate_clusters_scans_pairs_once(spark):
+    # the pair frame is usually an expensive lineage (LSH self-join +
+    # verification UDFs): the symmetric edge list must come from ONE
+    # scan of it, and the rounds must not recompute it
+    from pyspark.sql.types import LongType
+
+    from sketchlib.dedup.cluster import duplicate_clusters
+
+    rows = [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (5, 6), (7, 30)]
+    acc = spark.sparkContext.accumulator(0)
+
+    def count_row(x):
+        acc.add(1)
+        return x
+
+    counted = F.udf(count_row, LongType())
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long").select(
+        counted("id_a").alias("id_a"), "id_b"
+    )
+    labels = duplicate_clusters(pairs).collect()
+    assert acc.value == len(rows)
+    assert len(labels) == 40
+
+
 def test_star_clusters_adversarial_topologies(spark):
     """large-star/small-star vs pointer jumping on the two adversarial
     shapes (judge r2 lead): a 10k-node PATH (maximum diameter) and a
